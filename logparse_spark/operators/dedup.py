@@ -450,7 +450,10 @@ def ngram_jaccard_pairs(
 
     `block_col` bounds the join (same-language, length bucket, or an
     LSH bucket from minhash_lsh_candidates); without blocking this is
-    quadratic and refuses to pretend otherwise.
+    quadratic and refuses to pretend otherwise.  `id_col` must be
+    unique: a duplicate id raises ValueError (the mask path would merge
+    the duplicates' shingle sets into one mask, the array path would
+    emit a pair per row combination).
 
     Per-pair cost: when the runtime shingle vocabulary fits in
     `max_mask_words` distinct values (counted per invocation, one tiny
@@ -481,9 +484,15 @@ def ngram_jaccard_pairs(
     sh = narrow.select(
         "id", "blk", word_shingles(F.col("_t"), shingle_n).alias("sh"),
     ).localCheckpoint()  # shingle HOF would otherwise run once per join side
+    dup = sh.groupBy("id").count().where(F.col("count") > 1).select("id").limit(1).collect()
+    if dup:
+        raise ValueError(
+            f"ngram_jaccard_pairs: {id_col} is not unique (e.g. {dup[0]['id']!r})")
     if threshold > 0:
         vocab = sh.select(F.explode("sh").alias("w")).distinct()
-        n_words = vocab.count()  # driver-tiny scalar (gate decision only)
+        # the gate only asks "more than the cap?": the limit stops the
+        # count at cap + 1 instead of counting a large vocabulary in full
+        n_words = vocab.limit(max_mask_words + 1).count()
         if 0 < n_words <= max_mask_words:
             return _jaccard_pairs_masked(sh, vocab, n_words, threshold)
     a, b = sh.alias("a"), sh.alias("b")

@@ -23,7 +23,7 @@ def get_spark(
 
     - AQE on (runtime shuffle coalesce + skew-join split: half of the
       skew story, see operators/skew.py for the salted other half).
-    - Arrow on with a bounded batch size so the mapInPandas parse stage
+    - Arrow on with a bounded batch size so the mapInArrow parse stage
       streams fixed-size batches instead of whole partitions.
     - Session timezone pinned UTC: fixture timestamps are naive UTC and
       the DuckDB oracle compares naive values.
@@ -48,10 +48,24 @@ def get_spark(
         # harmless at test scale.
         .config("spark.sql.files.maxPartitionBytes", "134217728")
         .config("spark.sql.parquet.filterPushdown", "true")
-        # v2 committer: task-side renames (parallel) instead of a
-        # sequential driver-side commit — with thousands of sink
-        # partition dirs the v1 commit is a serial bottleneck
-        .config("spark.hadoop.mapreduce.fileoutputcommitter.algorithm.version", "2")
+        # Local-FS writes are bound by process forks, not by parquet
+        # encode: without libhadoop (not shipped with Spark's jars, so
+        # NativeIO is unavailable) RawLocalFileSystem.setPermission runs
+        # a `chmod` subprocess for every file and dir it creates.  JFR
+        # jdk.ProcessStart on a 20k-row fresh run (976 sink files):
+        # 6,187 chmod forks with the v2 committer and the checksummed
+        # local FS (hive-exec's ProxyLocalFileSystem) — 1,996 file
+        # creates (data + .crc sidecars), 2,176 task-attempt partition
+        # mkdirs, 1,997 mkdirs in v2's task-commit mergePaths — vs 3,192
+        # with Spark's default v1 committer (task commit is one rename;
+        # v1 is also the atomic one) and RawLocalFileSystem (no .crc
+        # sidecar).  The floor left is ~one fork per file create and per
+        # new partition dir, set by the (family, source, bucket) layout.
+        # Trade: Hadoop no longer verifies checksums when it reads local
+        # files back; sink content is still checked by the manifests'
+        # crc32 checksums and the tokens/parity gates.  The conf touches
+        # only `file:` URIs — a no-op on HDFS, S3 or Iceberg.
+        .config("spark.hadoop.fs.file.impl", "org.apache.hadoop.fs.RawLocalFileSystem")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "48g"))
         .config("spark.ui.enabled", "false")
         # JVM<->Python-worker channel over a UNIX domain socket instead

@@ -1,6 +1,7 @@
 """Dedup operators: planted duplicates must be found; determinism across
 partitionings (LSH/SimHash are seeded, never RNG-at-runtime)."""
 
+import pytest
 from pyspark.sql import functions as F
 
 from logparse_spark.operators import dedup as dd
@@ -428,3 +429,31 @@ def test_jaccard_mask_path_matches_array_path(spark):
     capped = sorted((r.id_a, r.id_b, r.jaccard) for r in
                     dd.ngram_jaccard_pairs(docs, max_mask_words=8, **kw).collect())
     assert capped == slow
+
+
+def test_jaccard_vocab_probe_is_capped(spark, monkeypatch):
+    """The mask-path gate counts at most max_mask_words + 1 distinct
+    shingles: an over-cap vocabulary is not counted in full."""
+    cls = type(spark.range(1))  # the session's concrete DataFrame class
+    limits = []
+    real_limit = cls.limit
+
+    def spy(self, n):
+        limits.append(n)
+        return real_limit(self, n)
+
+    monkeypatch.setattr(cls, "limit", spy)
+    pairs = {(r.id_a, r.id_b) for r in dd.ngram_jaccard_pairs(
+        _docs(spark), shingle_n=1, threshold=0.5, max_mask_words=3).collect()}
+    assert 3 + 1 in limits
+    assert ("d1", "d2") in pairs and ("d4", "d5") not in pairs
+
+
+def test_jaccard_rejects_duplicate_ids(spark):
+    """A duplicate id would be merged into one mask on the mask path but
+    paired row by row on the array path: both fail loudly instead."""
+    docs = spark.createDataFrame(DOCS + [("d1", "another text")],
+                                 "doc_id string, text string")
+    for cap in (4096, 0):
+        with pytest.raises(ValueError, match="not unique"):
+            dd.ngram_jaccard_pairs(docs, shingle_n=1, max_mask_words=cap)

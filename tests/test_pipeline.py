@@ -42,6 +42,31 @@ def test_observation_metrics(pipeline_out):
     assert metrics["unknown_rows"] > 0
 
 
+def test_sink_write_is_v1_commit_on_raw_local_fs(spark, tmp_path):
+    """A fresh run's sink write uses Spark's default v1 committer on
+    Hadoop's RawLocalFileSystem: no `.crc` sidecars (each cost a `chmod`
+    fork without libhadoop), no `_temporary` left behind, `_SUCCESS`
+    present."""
+    import os
+
+    out = str(tmp_path / "fresh")
+    run_pipeline(spark, generate_sequences(spark, 500, partitions=2), out,
+                 n_buckets=2, resume=False)
+    sinks = f"{out}/sinks"
+    assert os.path.exists(f"{sinks}/_SUCCESS")
+    for root, dirs, files in os.walk(sinks):
+        assert "_temporary" not in dirs, root
+        assert not [f for f in files if f.endswith(".crc")], root
+    jvm = spark._jvm
+    hconf = spark.sparkContext._jsc.hadoopConfiguration()
+    # FileSystem instances are cached per JVM: check the one in use
+    fs = jvm.org.apache.hadoop.fs.FileSystem.get(jvm.java.net.URI("file:///"), hconf)
+    assert fs.getClass().getName() == "org.apache.hadoop.fs.RawLocalFileSystem"
+    key = "mapreduce.fileoutputcommitter.algorithm.version"
+    assert hconf.get(key) != "2"
+    assert spark.conf.get(f"spark.hadoop.{key}", None) != "2"
+
+
 def test_every_doc_in_exactly_one_sink(spark, pipeline_out):
     out, _ = pipeline_out
     routed = read_sink(spark, f"{out}/sinks")
